@@ -32,35 +32,11 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from hadoop_main_spark.plans.registry import REGISTRY
+from hadoop_main_spark.runner import run_query
 from hadoop_main_spark.session import get_spark
 
 _REPO = os.path.dirname(os.path.abspath(__file__))
 BEST_LEDGER = os.path.join(_REPO, "BENCH_best.json")
-
-
-#: timing methodology (optimization r12, verdict-r11 #1): the timer
-#: covers build() + the noop action — iterative operators run real
-#: compute inside build() via EAGER localCheckpoint() (suffix
-#: prefix-doubling, CC rounds, OPQ/NN-descent training, streaming
-#: windows), so the old post-build t0 structurally under-reported
-#: them (the bench-flagged suffix_array_repeats ran its suffix-array
-#: construction untimed). SPARK_GRAFT_TIME_BUILD=0 restores the
-#: legacy action-only timing for cross-round comparison runs; the
-#: "timing" output field and the BENCH_best.json ledger key reflect
-#: whichever is active, so the two histories never mix.
-TIME_BUILD = os.environ.get("SPARK_GRAFT_TIME_BUILD", "1") != "0"
-
-
-def run_once(spark, name: str, sf_dir: str) -> float:
-    if not TIME_BUILD:  # legacy pre-r12 timing (action only)
-        df = REGISTRY[name].build(spark, sf_dir)
-        t0 = time.perf_counter()
-        df.write.format("noop").mode("overwrite").save()
-        return time.perf_counter() - t0
-    t0 = time.perf_counter()
-    df = REGISTRY[name].build(spark, sf_dir)
-    df.write.format("noop").mode("overwrite").save()
-    return time.perf_counter() - t0
 
 
 #: noisy gate: fast-3 spread > NOISE_GATE * min flags the entry.
@@ -96,15 +72,15 @@ def time_query(
     # JIT/codegen cold cost into all of its timed runs (+48% on
     # untouched code); a discarded first run makes every query's
     # timings position-independent
-    run_once(spark, name, sf_dir)
-    runs = sorted(run_once(spark, name, sf_dir) for _ in range(base_runs))
+    run_query(spark, name, sf_dir)
+    runs = sorted(run_query(spark, name, sf_dir).wall_s for _ in range(base_runs))
 
     def fast3_spread() -> float:
         return runs[min(2, len(runs) - 1)] - runs[0]
 
     extra = 0
     while fast3_spread() > RIDE_LINE * runs[0] and extra < max_extra:
-        runs.append(run_once(spark, name, sf_dir))
+        runs.append(run_query(spark, name, sf_dir).wall_s)
         runs.sort()
         extra += 1
     sp = fast3_spread()
@@ -160,8 +136,8 @@ def main() -> None:
     # recompile of the hottest codegen paths (each query additionally
     # gets its own untimed warmup run inside time_query)
     warm = "word_count" if "word_count" in names else names[0]
-    run_once(spark, warm, sf_dir)
-    run_once(spark, warm, sf_dir)
+    run_query(spark, warm, sf_dir)
+    run_query(spark, warm, sf_dir)
     times: dict[str, float] = {}
     spread: dict[str, float] = {}
     noisy: list[str] = []
@@ -173,9 +149,11 @@ def main() -> None:
             noisy.append(name)
     total = round(sum(times.values()), 3)
     # ledger key versioned by timing methodology: build()+action times
-    # are not comparable to the pre-r12 action-only minima, so they
-    # accumulate under a separate key (old history stays untouched)
-    sf_key = f"sf{sf}+build" if TIME_BUILD else f"sf{sf}"
+    # (optimization r12, verdict-r11 #1 — iterative operators run real
+    # compute inside build() via eager localCheckpoint(), which a
+    # post-build timer missed) are not comparable to the pre-r12
+    # action-only minima under "sf<N>", so they accumulate separately
+    sf_key = f"sf{sf}+build"
     best_entry = update_best_ledger(sf_key, times, total, noisy)
     # MRBench analog (JT/mapred/MRBench.java:201): tiny-job latency —
     # the scheduling+execution floor for a 1-row map/reduce round trip
@@ -209,7 +187,7 @@ def main() -> None:
                 "metric": "headline_queries_total_wall",
                 "value": total,
                 "unit": "sec",
-                "timing": "build+action" if TIME_BUILD else "action",
+                "timing": "build+action",
                 "queries": times,
                 "spread": spread,
                 "noisy": noisy,

@@ -72,12 +72,16 @@ def main(argv: list[str] | None = None) -> int:
             if args.query not in REGISTRY:
                 print(f"unknown query: {args.query}", file=sys.stderr)
                 return 2
-            df = REGISTRY[args.query].build(spark, args.sf_dir)
-            if args.out:
-                df.write.mode("overwrite").parquet(args.out)
-                print(f"wrote {args.out}")
-            else:
-                df.show(args.limit, truncate=False)
+            from hadoop_main_spark.runner import run_query
+
+            def action(df):
+                if args.out:
+                    df.write.mode("overwrite").parquet(args.out)
+                    print(f"wrote {args.out}")
+                else:
+                    df.show(args.limit, truncate=False)
+
+            run_query(spark, args.query, args.sf_dir, action=action)
             return 0
         if args.cmd == "sql":
             from hadoop_main_spark.tables import register_views

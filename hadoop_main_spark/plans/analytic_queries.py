@@ -25,6 +25,7 @@ from pyspark.sql import functions as F
 
 from hadoop_main_spark.plans.core_queries import _one, _price, _rate
 from hadoop_main_spark.plans.registry import query, t
+from hadoop_main_spark.runner import scratch_dir
 
 _REV_SQL = (
     "CAST(l_extendedprice AS DECIMAL(12,2))"
@@ -2971,8 +2972,6 @@ def equi_depth_histogram(spark: SparkSession, sf: str) -> DataFrame:
     "maintenance cost is |delta| + |view|, never |base|.",
 )
 def incremental_agg_maintenance(spark: SparkSession, sf: str) -> DataFrame:
-    import tempfile
-
     from hadoop_main_spark.operators.aggregate import merge_partial_aggs
     from hadoop_main_spark.sources.versioned import read_version, write_version
 
@@ -2991,7 +2990,7 @@ def incremental_agg_maintenance(spark: SparkSession, sf: str) -> DataFrame:
             F.max("event_id").alias("max_event_id"),
         )
 
-    snap = tempfile.mkdtemp(prefix="aggview_")
+    snap = scratch_dir("aggview_")
     write_version(view(e.filter(F.pmod("event_id", F.lit(2)) == 0)), snap)
     stored = read_version(spark, snap)
     delta = view(e.filter(F.pmod("event_id", F.lit(2)) == 1))

@@ -6,10 +6,10 @@ MultipleOutputs routing, the three explicit partitioners
 point lookup, and the counters framework — each with a closed-form
 DuckDB oracle, so every §2 operator has a green CORRECTNESS row.
 
-Fixture discipline: roundtrip queries write to tempfile.mkdtemp()
-(the seqfile/fixedwidth/csv precedent — a shared FS on a real
-cluster), and the oracle computes the same answer on the ORIGINAL
-parquet, so the write→read machinery is what gets verified.
+Fixture discipline: roundtrip queries write to runner.scratch_dir
+(the seqfile/fixedwidth/csv precedent), and the oracle computes the
+same answer on the ORIGINAL parquet, so the write→read machinery is
+what gets verified.
 
 The partitioner histograms compute the REFERENCE'S partition
 functions (Java int32 hash semantics) explicitly via
@@ -30,6 +30,7 @@ from hadoop_main_spark.operators.partitioning import (
     java_string_hash31_sql,
 )
 from hadoop_main_spark.plans.registry import query, t
+from hadoop_main_spark.runner import scratch_dir
 
 _NLINE_N = 100      # lines per split (NLineInputFormat's N)
 _N_REDUCERS = 7     # numReduceTasks for the partition histograms —
@@ -60,14 +61,12 @@ def _h60() -> F.Column:
     "partitions the reader actually produced (countDistinct of "
     "spark_partition_id captured before any shuffle) must equal "
     "ceil(total/N) exactly, alongside lossless line count and id sum. "
-    "LOCAL-MODE CONTRACT: tempfile.mkdtemp() write target.",
+    "Writes to runner.scratch_dir.",
 )
 def nline_split_agg(spark: SparkSession, sf: str) -> DataFrame:
-    import tempfile
-
     from hadoop_main_spark.sources.text import read_nline
 
-    out = tempfile.mkdtemp(prefix="nline_") + "/ids"
+    out = scratch_dir("nline_") + "/ids"
     (
         t(spark, sf, "documents")
         .select(F.lpad(F.col("doc_id").cast("string"), 12, "0").alias("value"))
@@ -105,15 +104,12 @@ def nline_split_agg(spark: SparkSession, sf: str) -> DataFrame:
     "than files (a hard Python raise, not a hope), "
     "compact_small_files rewrites them into exactly one file, and "
     "the read-back aggregate must be lossless per language with the "
-    "file counts (64 -> 1) in the row. LOCAL-MODE CONTRACT: "
-    "tempfile.mkdtemp() target.",
+    "file counts (64 -> 1) in the row. Writes to runner.scratch_dir.",
 )
 def combine_pack_agg(spark: SparkSession, sf: str) -> DataFrame:
-    import tempfile
-
     from hadoop_main_spark.sources.sinks import compact_small_files
 
-    base = tempfile.mkdtemp(prefix="combine_")
+    base = scratch_dir("combine_")
     small = f"{base}/small"
     (
         t(spark, sf, "documents")
@@ -161,16 +157,14 @@ def combine_pack_agg(spark: SparkSession, sf: str) -> DataFrame:
     "order-independent 60-bit text checksum must equal the oracle's "
     "per-language aggregate on the original parquet — a row routed "
     "to the wrong sink (or dropped, or duplicated) moves two rows. "
-    "LOCAL-MODE CONTRACT: tempfile.mkdtemp() target.",
+    "Writes to runner.scratch_dir.",
 )
 def multiple_outputs_agg(spark: SparkSession, sf: str) -> DataFrame:
-    import tempfile
-
     from hadoop_main_spark.sources.sinks import multiple_outputs
 
     langs = ["de", "en", "es", "fr", "zh"]
     d = t(spark, sf, "documents").select("doc_id", "lang", "text")
-    base = tempfile.mkdtemp(prefix="multiout_")
+    base = scratch_dir("multiout_")
     paths = multiple_outputs(
         d, {lg: F.col("lang") == lg for lg in langs}, base
     )
@@ -335,16 +329,13 @@ def binary_partition_hist(spark: SparkSession, sf: str) -> DataFrame:
     "midpoint) are fetched via mapfile_lookup — each lookup prunes to "
     "ONE bucket directory (partition filter) and skips row groups "
     "inside it — and the fetched rows must match the oracle's direct "
-    "selection byte-for-byte (text md5). LOCAL-MODE CONTRACT: "
-    "tempfile.mkdtemp() target.",
+    "selection byte-for-byte (text md5). Writes to runner.scratch_dir.",
 )
 def mapfile_point_lookup(spark: SparkSession, sf: str) -> DataFrame:
-    import tempfile
-
     from hadoop_main_spark.sources.layouts import mapfile_lookup, write_mapfile
 
     d = t(spark, sf, "documents").select("doc_id", "lang", "n_chars", "text")
-    path = tempfile.mkdtemp(prefix="mapfile_") + "/docs"
+    path = scratch_dir("mapfile_") + "/docs"
     write_mapfile(d, path, key="doc_id", n_buckets=16)
     lo, hi = d.agg(F.min("doc_id"), F.max("doc_id")).collect()[0]
     kmid = d.filter(F.col("doc_id") > (lo + hi) // 2).agg(

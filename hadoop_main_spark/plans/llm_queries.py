@@ -16,6 +16,7 @@ from hadoop_main_spark.operators import dedup as D
 from hadoop_main_spark.operators import similarity as SIM
 from hadoop_main_spark.operators import textstats as TS
 from hadoop_main_spark.plans.registry import query, t
+from hadoop_main_spark.runner import scratch_dir
 
 P = D.MINHASH_P
 J = D.NUM_HASHES
@@ -4430,18 +4431,17 @@ def _graph_stream_oracle(
     "CTE chain in the registry. A wave searching the wrong graph "
     "state, a lost reverse link, or a replayed batch moves a row. "
     "BUILD-COST NOTE: this builder EXECUTES the full streaming job "
-    "at plan-build time. LOCAL-MODE CONTRACT: tempfile.mkdtemp().",
+    "at plan-build time. Writes to runner.scratch_dir.",
 )
 def stream_graph_insert_roundtrip(spark: SparkSession, sf: str) -> DataFrame:
     import glob
     import os
     import shutil
-    import tempfile
 
     from hadoop_main_spark.streaming.windows import knn_graph_stream_parquet
 
     e = t(spark, sf, "embeddings").select("vec_id", "embedding")
-    root = tempfile.mkdtemp(prefix="streamgraph_")
+    root = scratch_dir("streamgraph_")
     idx = f"{root}/idx"
     SIM.build_knn_graph_index(
         e.filter(F.col("vec_id") >= 40), idx, k=5, iterations=2
@@ -4528,17 +4528,14 @@ def _write_parity_waves(df, root: str, order_col: str = "vec_id") -> str:
     "argmin replay with batch derived from id parity. A re-encoded "
     "corpus row, a wave landing in the wrong partition, or a replay "
     "that double-writes moves a row. BUILD-COST NOTE: executes the "
-    "streaming job at plan-build time. LOCAL-MODE CONTRACT: "
-    "tempfile.mkdtemp().",
+    "streaming job at plan-build time. Writes to runner.scratch_dir.",
 )
 def stream_pq_codes_roundtrip(spark: SparkSession, sf: str) -> DataFrame:
-    import tempfile
-
     from hadoop_main_spark.streaming.windows import pq_codes_stream_parquet
 
     e = t(spark, sf, "embeddings").select("vec_id", "embedding")
     cb, _ = SIM.pq_codebook(e)
-    root = tempfile.mkdtemp(prefix="streampq_")
+    root = scratch_dir("streampq_")
     src = _write_parity_waves(e, root)
     stream = (
         spark.readStream.schema(spark.read.parquet(src).schema)
@@ -4623,16 +4620,14 @@ def stream_pq_codes_roundtrip(spark: SparkSession, sf: str) -> DataFrame:
     "batch from id parity. A wrong cell route (centroid drift), a "
     "residual computed against the wrong centroid grid, or a replay "
     "double-write moves a row. BUILD-COST NOTE: builds the index AND "
-    "executes the streaming job at plan-build time. LOCAL-MODE "
-    "CONTRACT: tempfile.mkdtemp().",
+    "executes the streaming job at plan-build time. "
+    "Writes to runner.scratch_dir.",
 )
 def stream_residual_codes_roundtrip(spark: SparkSession, sf: str) -> DataFrame:
-    import tempfile
-
     from hadoop_main_spark.streaming.windows import residual_codes_stream_parquet
 
     e = t(spark, sf, "embeddings")
-    root = tempfile.mkdtemp(prefix="streamres_")
+    root = scratch_dir("streamres_")
     idx = f"{root}/idx"
     SIM.build_ivfpq_residual_index(e, idx, "label")
     src = _write_parity_waves(e.select("vec_id", "embedding"), root)
@@ -5222,7 +5217,7 @@ def _index_dir(sf: str, kind: str, table: str = "embeddings") -> str:
     built from old data (review-r6). Stale sibling dirs of the same
     kind (previous fingerprints) are pruned here, so iterating on
     data generation never accumulates orphaned indexes in /tmp.
-    LOCAL-MODE CONTRACT (same as avro_roundtrip_agg): driver and
+    LOCAL-MODE CONTRACT (same as runner.scratch_dir): driver and
     executors share one filesystem here; on a real cluster the index
     lives on the shared FS (S3/HDFS) and this helper is replaced by a
     real path — the build_*/probe operators themselves are
@@ -6867,15 +6862,13 @@ def weighted_doc_sample(spark: SparkSession, sf: str) -> DataFrame:
     "oracle VERBATIM: a chunk lost at a batch boundary, a replayed "
     "double-write, or any stream-vs-batch boundary divergence moves "
     "a count. BUILD-COST NOTE: executes the streaming job at "
-    "plan-build time. LOCAL-MODE CONTRACT: tempfile.mkdtemp().",
+    "plan-build time. Writes to runner.scratch_dir.",
 )
 def stream_cdc_roundtrip(spark: SparkSession, sf: str) -> DataFrame:
-    import tempfile
-
     from hadoop_main_spark.streaming.windows import cdc_chunks_stream_parquet
 
     d = t(spark, sf, "documents")
-    root = tempfile.mkdtemp(prefix="streamcdc_")
+    root = scratch_dir("streamcdc_")
     src = _write_parity_waves(d.select("doc_id", "text"), root, "doc_id")
     stream = (
         spark.readStream.schema("doc_id long, text string")
@@ -6985,12 +6978,9 @@ def _cdc_delta_oracle() -> str:
     "touched — per language the output pins total chars vs uploaded "
     "chars (the delta-transfer win, typically a few chunks per "
     "changed doc), and the oracle replays BOTH chunkings plus the "
-    "store anti-join closed-form. LOCAL-MODE CONTRACT: "
-    "tempfile.mkdtemp() snapshot dir.",
+    "store anti-join closed-form. Writes to runner.scratch_dir.",
 )
 def cdc_delta_transfer(spark: SparkSession, sf: str) -> DataFrame:
-    import tempfile
-
     from hadoop_main_spark.sources.versioned import read_version, write_version
 
     par = spark.sparkContext.defaultParallelism
@@ -6998,7 +6988,7 @@ def cdc_delta_transfer(spark: SparkSession, sf: str) -> DataFrame:
     c1 = D.cdc_chunks(
         d.select("doc_id", "text").repartition(par)
     )
-    snap = tempfile.mkdtemp(prefix="cdcstore_")
+    snap = scratch_dir("cdcstore_")
     write_version(
         c1.select(F.col("chunk_md5").alias("dg")).distinct(), snap
     )
@@ -7292,11 +7282,9 @@ def sorted_neighborhood_dedup(spark: SparkSession, sf: str) -> DataFrame:
     "(one-shot equality): a double-applied wave, a lost view key at "
     "a batch boundary, or a combine-algebra error moves a count. "
     "BUILD-COST NOTE: executes the streaming job at plan-build "
-    "time. LOCAL-MODE CONTRACT: tempfile.mkdtemp().",
+    "time. Writes to runner.scratch_dir.",
 )
 def stream_agg_view_roundtrip(spark: SparkSession, sf: str) -> DataFrame:
-    import tempfile
-
     from hadoop_main_spark.streaming.windows import (
         agg_view_stream_parquet,
         read_agg_view,
@@ -7305,7 +7293,7 @@ def stream_agg_view_roundtrip(spark: SparkSession, sf: str) -> DataFrame:
     e = t(spark, sf, "events").select(
         "user_id", "event_type", "event_id", "value"
     )
-    root = tempfile.mkdtemp(prefix="streamaggview_")
+    root = scratch_dir("streamaggview_")
     src = _write_parity_waves(e, root, "event_id")
     stream = (
         spark.readStream.schema(

@@ -16,6 +16,7 @@ from pyspark.sql import functions as F
 from hadoop_main_spark.operators import multimodal as MM
 from hadoop_main_spark.operators import pipe as PIPE
 from hadoop_main_spark.plans.registry import query, t
+from hadoop_main_spark.runner import scratch_dir
 
 
 def _codec_ids(spark: SparkSession, sf: str) -> DataFrame:
@@ -1093,21 +1094,14 @@ def id3_apic_art_dedup(spark: SparkSession, sf: str) -> DataFrame:
     "sums, and an order-independent text checksum (sum of 60-bit text "
     "hashes) must match the oracle computed on the ORIGINAL parquet — "
     "any encode/decode corruption of any row moves the checksum. The "
-    "write lands in a per-session temp dir (generator-query "
-    "discipline, like db_count_pageview's embedded Derby). "
-    "LOCAL-MODE CONTRACT: tempfile.mkdtemp() resolves on the driver "
-    "and the mapInArrow writer opens it on executors — one shared "
-    "filesystem here; on a real cluster pass write_avro a shared-FS "
-    "path (S3/HDFS) instead (same caveat as _ivfpq_index_dir).",
+    "write lands in a runner.scratch_dir, deleted when the run ends.",
 )
 def avro_roundtrip_agg(spark: SparkSession, sf: str) -> DataFrame:
-    import tempfile
-
     from hadoop_main_spark.sources.avro import write_avro
     from hadoop_main_spark.sources.text import auto_input
 
     d = t(spark, sf, "documents")
-    out = tempfile.mkdtemp(prefix="avro_rt_") + "/documents.avro"
+    out = scratch_dir("avro_rt_") + "/documents.avro"
     write_avro(d, out, codec="deflate")
     back = auto_input(spark, out)
     h60 = F.conv(F.substring(F.md5("text"), 1, 15), 16, 10).cast("bigint")
@@ -1137,15 +1131,11 @@ def avro_roundtrip_agg(spark: SparkSession, sf: str) -> DataFrame:
     "path executes (stripe/row-group stats prune on the min/max of "
     "n_chars), then per-language counts, char sums, and the "
     "order-independent 60-bit text checksum must match the oracle on "
-    "the ORIGINAL parquet. LOCAL-MODE CONTRACT: tempfile.mkdtemp() as "
-    "the write target (shared FS on a real cluster — the write_avro "
-    "caveat).",
+    "the ORIGINAL parquet. Writes to runner.scratch_dir.",
 )
 def orc_roundtrip_agg(spark: SparkSession, sf: str) -> DataFrame:
-    import tempfile
-
     d = t(spark, sf, "documents").select("doc_id", "lang", "n_chars", "text")
-    out = tempfile.mkdtemp(prefix="orc_rt_") + "/documents.orc"
+    out = scratch_dir("orc_rt_") + "/documents.orc"
     d.write.option("compression", "zlib").orc(out)
     back = spark.read.orc(out).filter(F.col("n_chars") >= 200)
     h60 = F.conv(F.substring(F.md5("text"), 1, 15), 16, 10).cast("bigint")
@@ -1184,18 +1174,16 @@ _CSV_EVIL = '\n",\\\t'
     "language against the oracle computing the same adversarial text "
     "directly on the parquet — so the quoting/escaping machinery "
     "itself is what is verified, not just happy-path values. "
-    "LOCAL-MODE CONTRACT: tempfile.mkdtemp() write target.",
+    "Writes to runner.scratch_dir.",
 )
 def csv_roundtrip_agg(spark: SparkSession, sf: str) -> DataFrame:
-    import tempfile
-
     d = t(spark, sf, "documents").select(
         "doc_id",
         "lang",
         "n_chars",
         F.concat(F.col("text"), F.lit(_CSV_EVIL)).alias("text"),
     )
-    out = tempfile.mkdtemp(prefix="csv_rt_") + "/documents.csv"
+    out = scratch_dir("csv_rt_") + "/documents.csv"
     (
         d.write.option("header", "true")
         .option("quoteAll", "true")
@@ -1241,19 +1229,16 @@ def csv_roundtrip_agg(spark: SparkSession, sf: str) -> DataFrame:
     "order-independent 60-bit text checksum must equal the oracle "
     "computed on the ORIGINAL parquet for every layout; any "
     "encode/decode corruption in any layout moves its row. "
-    "LOCAL-MODE CONTRACT: tempfile.mkdtemp() as the write target "
-    "(shared FS on a real cluster — the write_avro caveat).",
+    "Writes to runner.scratch_dir.",
 )
 def seqfile_roundtrip_agg(spark: SparkSession, sf: str) -> DataFrame:
-    import tempfile
-
     from hadoop_main_spark.sources.sequencefile import (
         read_sequencefile,
         write_sequencefile,
     )
 
     d = t(spark, sf, "documents").select("doc_id", "text")
-    base = tempfile.mkdtemp(prefix="seqrt_")
+    base = scratch_dir("seqrt_")
     parts = []
     for layout, codec, block in (
         ("none", None, None),
@@ -1293,15 +1278,13 @@ def seqfile_roundtrip_agg(spark: SparkSession, sf: str) -> DataFrame:
     "read_fixed_width's offsets, and re-aggregated per language — "
     "counts, id sums, and char sums must match the oracle on the "
     "original parquet, so any mis-sliced offset or padding bug moves "
-    "a value. LOCAL-MODE CONTRACT: tempfile.mkdtemp() target.",
+    "a value. Writes to runner.scratch_dir.",
 )
 def fixedwidth_roundtrip_agg(spark: SparkSession, sf: str) -> DataFrame:
-    import tempfile
-
     from hadoop_main_spark.sources.text import read_fixed_width
 
     d = t(spark, sf, "documents")
-    out = tempfile.mkdtemp(prefix="fixedrt_") + "/docs"
+    out = scratch_dir("fixedrt_") + "/docs"
     (
         d.select(
             F.concat(
@@ -1345,16 +1328,13 @@ def fixedwidth_roundtrip_agg(spark: SparkSession, sf: str) -> DataFrame:
     "read back with read_xml_records's begin/end-mark scan, fields "
     "re-extracted, and re-aggregated per language against the oracle "
     "on the original parquet — a mis-framed record boundary or "
-    "dropped element moves a count. LOCAL-MODE CONTRACT: "
-    "tempfile.mkdtemp() target.",
+    "dropped element moves a count. Writes to runner.scratch_dir.",
 )
 def xml_roundtrip_agg(spark: SparkSession, sf: str) -> DataFrame:
-    import tempfile
-
     from hadoop_main_spark.sources.text import read_xml_records
 
     d = t(spark, sf, "documents")
-    out = tempfile.mkdtemp(prefix="xmlrt_") + "/docs"
+    out = scratch_dir("xmlrt_") + "/docs"
     (
         d.select(
             F.concat(
@@ -1407,15 +1387,13 @@ def xml_roundtrip_agg(spark: SparkSession, sf: str) -> DataFrame:
     "reader resolves the index and slices part files), re-parsed and "
     "re-aggregated per language against the oracle on the original "
     "parquet — an index offset bug or truncated entry moves a sum. "
-    "LOCAL-MODE CONTRACT: tempfile.mkdtemp() target.",
+    "Writes to runner.scratch_dir.",
 )
 def har_roundtrip_agg(spark: SparkSession, sf: str) -> DataFrame:
-    import tempfile
-
     from hadoop_main_spark.sources.har import create_har
 
     d = t(spark, sf, "documents")
-    base = tempfile.mkdtemp(prefix="harrt_")
+    base = scratch_dir("harrt_")
     src, har = f"{base}/src", f"{base}/docs.har"
     (
         d.select(
@@ -1463,15 +1441,12 @@ def har_roundtrip_agg(spark: SparkSession, sf: str) -> DataFrame:
     "documents COPY is read and aggregated — per-language counts and "
     "the order-independent 60-bit text checksum must equal the "
     "oracle computed on the ORIGINAL file, certifying a byte-exact "
-    "distributed copy end-to-end. LOCAL-MODE CONTRACT: "
-    "tempfile.mkdtemp() target.",
+    "distributed copy end-to-end. Writes to runner.scratch_dir.",
 )
 def distcp_roundtrip_agg(spark: SparkSession, sf: str) -> DataFrame:
-    import tempfile
-
     from hadoop_main_spark.sources.distcp import distcp
 
-    dst_dir = tempfile.mkdtemp(prefix="distcprt_")
+    dst_dir = scratch_dir("distcprt_")
     dst = f"{dst_dir}/documents.parquet"
     report = distcp(spark, sf.rstrip("/"), dst_dir)
     bad = report.filter(F.col("ok") == 0).count() if "ok" in report.columns else 0
@@ -1583,16 +1558,13 @@ def _stream_dedup_oracle() -> str:
     "at plan-build time (write + awaitTermination) and returns a "
     "batch read of the sink — plans-only tooling (dump_plans, "
     "plan_lint) pays a multi-second stream execution per call. "
-    "missing/duplicated pair. LOCAL-MODE CONTRACT: "
-    "tempfile.mkdtemp() sinks (shared FS on a real cluster).",
+    "missing/duplicated pair. Writes to runner.scratch_dir.",
 )
 def stream_dedup_roundtrip(spark: SparkSession, sf: str) -> DataFrame:
-    import tempfile
-
     from hadoop_main_spark.streaming.windows import dedup_ingest_stream
 
     d = t(spark, sf, "documents").select("doc_id", "text")
-    base = tempfile.mkdtemp(prefix="streamrt_")
+    base = scratch_dir("streamrt_")
     src = f"{base}/src"
     # 4 source files -> 4 genuine micro-batches; which docs land in
     # which batch is irrelevant by the union invariant
@@ -1828,12 +1800,9 @@ def _timesplit_stream(
     "at plan-build time (write + awaitTermination) and returns a "
     "batch read of the sink — plans-only tooling (dump_plans, "
     "plan_lint) pays a multi-second stream execution per call. "
-    "watermark promises, not a bug. LOCAL-MODE CONTRACT: "
-    "tempfile.mkdtemp() sinks.",
+    "watermark promises, not a bug. Writes to runner.scratch_dir.",
 )
 def stream_window_roundtrip(spark: SparkSession, sf: str) -> DataFrame:
-    import tempfile
-
     from hadoop_main_spark.streaming.windows import (
         stream_partition_scope,
         tumbling_counts,
@@ -1841,7 +1810,7 @@ def stream_window_roundtrip(spark: SparkSession, sf: str) -> DataFrame:
     )
 
     e = t(spark, sf, "events")
-    base = tempfile.mkdtemp(prefix="streamwrt_")
+    base = scratch_dir("streamwrt_")
     stream = _timesplit_stream(spark, e, "ts", f"{base}/src")
     # volume-derived state partitioning for the stateful window agg
     # (optimization r12; see sized_stream_partitions)
@@ -1895,17 +1864,15 @@ def stream_window_roundtrip(spark: SparkSession, sf: str) -> DataFrame:
     "at plan-build time (write + awaitTermination) and returns a "
     "batch read of the sink — plans-only tooling (dump_plans, "
     "plan_lint) pays a multi-second stream execution per call. "
-    "boundary merge, or session-splitting bug moves rows. LOCAL-MODE "
-    "CONTRACT: tempfile.mkdtemp() sinks (shared FS on a real cluster).",
+    "boundary merge, or session-splitting bug moves rows. "
+    "Writes to runner.scratch_dir.",
 )
 def stream_session_roundtrip(spark: SparkSession, sf: str) -> DataFrame:
-    import tempfile
-
     from pyspark.sql import Window
     from hadoop_main_spark.streaming.stateful import gap_sessions
 
     e = t(spark, sf, "events").select("user_id", "ts", "event_id")
-    base = tempfile.mkdtemp(prefix="streamsess_")
+    base = scratch_dir("streamsess_")
     stream = _timesplit_stream(spark, e, "ts", f"{base}/src")
     out = f"{base}/out"
 
@@ -1960,11 +1927,9 @@ def stream_session_roundtrip(spark: SparkSession, sf: str) -> DataFrame:
     "plan_lint) pays a multi-second stream execution per call. "
     "join state survives exactly as long as the watermark promises; "
     "a premature state eviction or a dropped late row moves pairs. "
-    "LOCAL-MODE CONTRACT: tempfile.mkdtemp() sinks.",
+    "Writes to runner.scratch_dir.",
 )
 def stream_interval_join_roundtrip(spark: SparkSession, sf: str) -> DataFrame:
-    import tempfile
-
     from hadoop_main_spark.streaming.joins import interval_join
     from hadoop_main_spark.streaming.windows import (
         stream_partition_scope,
@@ -1972,7 +1937,7 @@ def stream_interval_join_roundtrip(spark: SparkSession, sf: str) -> DataFrame:
     )
 
     e = t(spark, sf, "events")
-    base = tempfile.mkdtemp(prefix="streamssj_")
+    base = scratch_dir("streamssj_")
     clicks = e.filter(F.col("event_type") == "click").select(
         "user_id", F.col("ts").alias("l_ts"), F.col("event_id").alias("click_id")
     )
@@ -2012,19 +1977,16 @@ def stream_interval_join_roundtrip(spark: SparkSession, sf: str) -> DataFrame:
     "must equal the batch groupBy exactly. A lost batch, a stale "
     "state read, or a double-applied replay moves a count. "
     "BUILD-COST NOTE: this builder EXECUTES the full streaming job "
-    "at plan-build time. LOCAL-MODE CONTRACT: tempfile.mkdtemp() "
-    "sinks.",
+    "at plan-build time. Writes to runner.scratch_dir.",
 )
 def stream_running_totals_roundtrip(spark: SparkSession, sf: str) -> DataFrame:
-    import tempfile
-
     from pyspark.sql import Window
     from hadoop_main_spark.streaming.stateful import running_totals
 
     e = t(spark, sf, "events").select(
         "user_id", F.round(F.col("value") * 100).cast("long").alias("cents")
     )
-    base = tempfile.mkdtemp(prefix="streamrun_")
+    base = scratch_dir("streamrun_")
     src = f"{base}/src"
     e.repartition(4).write.parquet(src)
     stream = (
@@ -2089,11 +2051,9 @@ def stream_running_totals_roundtrip(spark: SparkSession, sf: str) -> DataFrame:
     "must hold exactly the windows with window_end <= max(ts) - 4h "
     "with batch-identical decimal-exact averages. BUILD-COST NOTE: "
     "this builder EXECUTES the full streaming job at plan-build time. "
-    "LOCAL-MODE CONTRACT: tempfile.mkdtemp() sinks.",
+    "Writes to runner.scratch_dir.",
 )
 def stream_sliding_window_roundtrip(spark: SparkSession, sf: str) -> DataFrame:
-    import tempfile
-
     from hadoop_main_spark.streaming.windows import (
         sliding_avg,
         stream_partition_scope,
@@ -2101,7 +2061,7 @@ def stream_sliding_window_roundtrip(spark: SparkSession, sf: str) -> DataFrame:
     )
 
     e = t(spark, sf, "events")
-    base = tempfile.mkdtemp(prefix="streamslw_")
+    base = scratch_dir("streamslw_")
     stream = _timesplit_stream(spark, e, "ts", f"{base}/src")
     # volume-derived state partitioning for the sliding-window agg
     # (optimization r12; see sized_stream_partitions)
@@ -2145,18 +2105,17 @@ def stream_sliding_window_roundtrip(spark: SparkSession, sf: str) -> DataFrame:
     "accumulated key, a stale read of the being-replaced dir, or a "
     "double-applied replay moves a row. BUILD-COST NOTE: this "
     "builder EXECUTES the full streaming job at plan-build time. "
-    "LOCAL-MODE CONTRACT: tempfile.mkdtemp() sinks.",
+    "Writes to runner.scratch_dir.",
 )
 def stream_upsert_roundtrip(spark: SparkSession, sf: str) -> DataFrame:
     import glob
     import os
     import shutil
-    import tempfile
 
     from hadoop_main_spark.streaming.windows import upsert_stream_parquet
 
     e = t(spark, sf, "events").select("user_id", "event_id", "ts")
-    base = tempfile.mkdtemp(prefix="streamup_")
+    base = scratch_dir("streamup_")
     src = f"{base}/src"
     os.makedirs(src)
     for k in range(4):
@@ -2906,14 +2865,13 @@ def pdf15_text_extract(spark: SparkSession, sf: str) -> DataFrame:
     "pdf_text_extract's closed-form oracle VERBATIM: a record lost "
     "at a batch boundary, a replayed file double-write, or any "
     "stream-vs-batch walker divergence moves a row. BUILD-COST NOTE: "
-    "executes the streaming job at plan-build time. LOCAL-MODE "
-    "CONTRACT: tempfile.mkdtemp().",
+    "executes the streaming job at plan-build time. "
+    "Writes to runner.scratch_dir.",
 )
 def stream_pdf_roundtrip(spark: SparkSession, sf: str) -> DataFrame:
     import glob
     import os
     import shutil
-    import tempfile
 
     import pandas as pd
 
@@ -2933,7 +2891,7 @@ def stream_pdf_roundtrip(spark: SparkSession, sf: str) -> DataFrame:
             yield pd.DataFrame({"media_id": ids, "payload": payloads})
 
     media = docs.mapInPandas(gen, "media_id long, payload binary")
-    base = tempfile.mkdtemp(prefix="streampdf_")
+    base = scratch_dir("streampdf_")
     src = f"{base}/src"
     os.makedirs(src)
     for w in (0, 1):
@@ -2996,7 +2954,7 @@ def stream_pdf_roundtrip(spark: SparkSession, sf: str) -> DataFrame:
     "ones. The records parse back through warc_records and must "
     "match the closed-form oracle: record type, profile, refers-to, "
     "digest, and body md5/bytes all derived from the doc-id change "
-    "rule. LOCAL-MODE CONTRACT: tempfile.mkdtemp() snapshot dir.",
+    "rule. Writes to runner.scratch_dir.",
 )
 def warc_revisit_dedup(spark: SparkSession, sf: str) -> DataFrame:
     return (
@@ -3053,7 +3011,6 @@ def _recrawl_records(spark: SparkSession, sf: str) -> DataFrame:
     commit as a versioned snapshot, the recrawl writes through
     revisit_warc_media against that snapshot, and the one-record
     WARCs parse back through warc_records."""
-    import tempfile
 
     from hadoop_main_spark.sources.versioned import read_version, write_version
     from hadoop_main_spark.sources.warc import revisit_warc_media, warc_records
@@ -3062,7 +3019,7 @@ def _recrawl_records(spark: SparkSession, sf: str) -> DataFrame:
         spark.sparkContext.defaultParallelism
     )
     crawl1 = _recrawl_crawl(docs, changed=False)
-    snap = tempfile.mkdtemp(prefix="warcsnap_")
+    snap = scratch_dir("warcsnap_")
     write_version(crawl1.select("uri", "digest"), snap)
     crawl2 = _recrawl_crawl(docs, changed=True)
     warcs = revisit_warc_media(
@@ -3409,18 +3366,17 @@ def html_link_graph(spark: SparkSession, sf: str) -> DataFrame:
     "row. BUILD-COST NOTE: this builder EXECUTES the full streaming "
     "job at plan-build time — plans-only tooling (dump_plans, "
     "plan_lint) pays a multi-second stream execution per call. "
-    "LOCAL-MODE CONTRACT: tempfile.mkdtemp() sinks.",
+    "Writes to runner.scratch_dir.",
 )
 def stream_warc_roundtrip(spark: SparkSession, sf: str) -> DataFrame:
     import glob
     import os
     import shutil
-    import tempfile
 
     from hadoop_main_spark.streaming.windows import warc_records_stream_parquet
 
     media = _warc_media(spark, sf)
-    base = tempfile.mkdtemp(prefix="streamwarc_")
+    base = scratch_dir("streamwarc_")
     src = f"{base}/src"
     os.makedirs(src)
     for k in range(4):
@@ -3480,14 +3436,12 @@ def stream_warc_roundtrip(spark: SparkSession, sf: str) -> DataFrame:
     "(pixel rows are (doc_id*31 + r) % 256). A dropped wave, a "
     "replayed file double-write, or any stream-vs-batch decoder "
     "divergence moves a row. BUILD-COST NOTE: executes the streaming "
-    "job at plan-build time. LOCAL-MODE CONTRACT: "
-    "tempfile.mkdtemp().",
+    "job at plan-build time. Writes to runner.scratch_dir.",
 )
 def stream_media_features_roundtrip(spark: SparkSession, sf: str) -> DataFrame:
     import glob
     import os
     import shutil
-    import tempfile
 
     import pandas as pd
 
@@ -3513,7 +3467,7 @@ def stream_media_features_roundtrip(spark: SparkSession, sf: str) -> DataFrame:
             yield pd.DataFrame({"media_id": ids, "payload": payloads})
 
     media = docs.mapInPandas(gen, "media_id long, payload binary")
-    base = tempfile.mkdtemp(prefix="streammedia_")
+    base = scratch_dir("streammedia_")
     src = f"{base}/src"
     os.makedirs(src)
     for w in (0, 1):
@@ -3591,8 +3545,7 @@ ORDER BY doc_id
     "singleton), with the record class matching the closed-form "
     "change rule. A wrong revisit decision corrupts the wave and "
     "moves cluster rows — the composition, not just the pieces, is "
-    "what's verified. LOCAL-MODE CONTRACT: tempfile.mkdtemp() "
-    "snapshot dir.",
+    "what's verified. Writes to runner.scratch_dir.",
 )
 def recrawl_maintenance(spark: SparkSession, sf: str) -> DataFrame:
     from hadoop_main_spark.operators import dedup as D

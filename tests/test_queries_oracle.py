@@ -16,6 +16,7 @@ sys.path.insert(0, os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(
 from check_correctness import compare, duck_connection
 
 from hadoop_main_spark.plans.registry import REGISTRY, resolve_oracle
+from hadoop_main_spark.runner import run_query
 
 
 @pytest.fixture(scope="module")
@@ -28,7 +29,7 @@ def duck(sf_dir):
 @pytest.mark.parametrize("name", sorted(REGISTRY))
 def test_query_matches_oracle(spark, sf_dir, duck, name):
     q = REGISTRY[name]
-    sdf = q.build(spark, sf_dir).toPandas()
+    sdf = run_query(spark, name, sf_dir, action=lambda df: df.toPandas()).result
     oracle = resolve_oracle(q, sf_dir)
     if oracle is None:
         assert len(sdf) >= 0  # rows-only check

@@ -45,18 +45,13 @@ def test_rhp_signature_kernel_matches_expression(spark, sf_dir):
         # and read the band values it would join on
         from hadoop_main_spark.operators import dedup as DD
 
-        captured = {}
-
-        def _capture(df_pairs_input=corpus, b=bits, bb=band_bits):
-            pairs = DD.rhp_cosine_pairs(
-                df_pairs_input, "vec_id", "v", dim=64, bits=b, band_bits=bb,
-                min_cosine=-2.0,  # keep every candidate: the pair set
-                # then depends ONLY on band equality, so equal band
-                # tables <=> equal pair sets
-            )
-            return {(r["id_a"], r["id_b"]) for r in pairs.collect()}
-
-        got_pairs = _capture()
+        pairs = DD.rhp_cosine_pairs(
+            corpus, "vec_id", "v", dim=64, bits=bits, band_bits=band_bits,
+            min_cosine=-2.0,  # keep every candidate: the pair set
+            # then depends ONLY on band equality, so equal band
+            # tables <=> equal pair sets
+        )
+        got_pairs = {(r["id_a"], r["id_b"]) for r in pairs.collect()}
         # expected pairs from the expression-form band table
         exp_pairs = set()
         by_bucket: dict[tuple[int, int], list] = {}

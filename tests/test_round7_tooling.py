@@ -1,10 +1,13 @@
 """Unit tests for the round-7 self-enforcement tooling: the plan-lint
-tree parser / rules (tools/plan_lint.py) and the bench best-known
-ledger (bench.py). Pure logic — no SparkSession needed."""
+tree parser / rules (tools/plan_lint.py), the bench best-known
+ledger (bench.py) and sweep_all's argument parsing. Pure logic — no
+SparkSession needed."""
 
 import json
 import os
 import sys
+
+import pytest
 
 sys.path.insert(0, os.path.join(os.path.dirname(__file__), "..", "tools"))
 sys.path.insert(0, os.path.join(os.path.dirname(__file__), ".."))
@@ -113,6 +116,21 @@ def test_bench_best_ledger_merge(tmp_path, monkeypatch):
     # better total for the original set updates in place
     e4 = B.update_best_ledger("sf0.1", {"q1": 0.4, "q2": 1.0}, 1.4, [])
     assert e4["total"] == 1.4
+
+
+def test_sweep_all_positionals_are_query_names():
+    """Every positional is a query name; the ledger path only comes
+    from --out (a bare query name must not become the output file)."""
+    import sweep_all as SW
+
+    a = SW.parse_args(["word_count"])
+    assert a.queries == ["word_count"]
+    assert a.out == "/tmp/sweep_all.json"
+    a = SW.parse_args(["--out", "x.json", "--runs", "3", "word_count", "grep_count"])
+    assert (a.out, a.runs, a.queries) == ("x.json", 3, ["word_count", "grep_count"])
+    assert len(SW.parse_args([]).queries) == len(SW.REGISTRY)
+    with pytest.raises(SystemExit):
+        SW.parse_args(["out.json"])  # not a registry query
 
 
 def test_scale_gate_10x_corpus_join_consistency(spark, tmp_path):

@@ -37,6 +37,7 @@ import duckdb
 import pandas as pd
 
 from hadoop_main_spark.plans.registry import REGISTRY, resolve_oracle
+from hadoop_main_spark.runner import run_query
 from hadoop_main_spark.session import get_spark
 from hadoop_main_spark.tables import TABLE_NAMES
 
@@ -169,7 +170,7 @@ def check_one(spark, con, name, q, sf_dir, use_cache, data_fp="") -> tuple[str, 
     """Returns (status_line, 'pass'|'fail'|'rows_only')."""
     t0 = time.time()
     try:
-        sdf = q.build(spark, sf_dir).toPandas()
+        sdf = run_query(spark, name, sf_dir, action=lambda df: df.toPandas()).result
     except Exception as e:
         return f"FAIL  {name}: spark error: {e}", "fail"
     try:

@@ -40,6 +40,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from hadoop_main_spark.plans.registry import REGISTRY
+from hadoop_main_spark.runner import run_query
 from hadoop_main_spark.session import get_spark
 from hadoop_main_spark.tables import TABLE_NAMES, data_fingerprint, load_table
 
@@ -406,13 +407,7 @@ def time_query(spark, name: str, sf_dir: str, runs: int = 2) -> float:
     # eager localCheckpoint(); timing only the sink under-reported
     # them and produced <1.0 10x ratios (e.g. suffix_array_repeats'
     # untimed suffix-array construction).
-    best = float("inf")
-    for _ in range(runs):
-        t0 = time.perf_counter()
-        df = REGISTRY[name].build(spark, sf_dir)
-        df.write.format("noop").mode("overwrite").save()
-        best = min(best, time.perf_counter() - t0)
-    return best
+    return min(run_query(spark, name, sf_dir).wall_s for _ in range(runs))
 
 
 def main() -> int:

@@ -1,44 +1,45 @@
 """Full-registry noop timing sweep (optimization rounds).
 
-Times EVERY registry query at $SPARK_GRAFT_SF_DIR (default sf0.1),
-build()+action (the r12 methodology — eager-checkpoint iterative
-queries do real compute in build()), min of N runs after one untimed
-warmup, and writes a ranked JSON ledger to the path given as argv[1]
-(default /tmp/sweep_all.json). Use to find the expensive registry
-tail beyond the bench headline set.
+Times EVERY registry query (or the named ones) at $SPARK_GRAFT_SF_DIR
+(default sf0.1) through runner.run_query — build()+action, the r12
+methodology: eager-checkpoint iterative queries do real compute in
+build() — min of N runs after one untimed warmup, and writes a ranked
+JSON ledger to --out (default /tmp/sweep_all.json). Use to find the
+expensive registry tail beyond the bench headline set.
 
-Usage: python tools/sweep_all.py [out.json] [--runs N] [query ...]
+Usage: python tools/sweep_all.py [--out PATH] [--runs N] [query ...]
 """
 
 from __future__ import annotations
 
+import argparse
 import json
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from hadoop_main_spark.plans.registry import REGISTRY
+from hadoop_main_spark.runner import run_query
 from hadoop_main_spark.session import get_spark
 
 
-def run_once(spark, name: str, sf_dir: str) -> float:
-    t0 = time.perf_counter()
-    df = REGISTRY[name].build(spark, sf_dir)
-    df.write.format("noop").mode("overwrite").save()
-    return time.perf_counter() - t0
+def parse_args(argv: list[str] | None = None) -> argparse.Namespace:
+    ap = argparse.ArgumentParser(prog="sweep_all.py")
+    ap.add_argument("--out", default="/tmp/sweep_all.json", help="ledger path")
+    ap.add_argument("--runs", type=int, default=2, help="timed runs per query")
+    ap.add_argument("queries", nargs="*", help="registry queries (default: all)")
+    args = ap.parse_args(argv)
+    unknown = [n for n in args.queries if n not in REGISTRY]
+    if unknown:
+        ap.error(f"unknown queries: {unknown}")
+    args.queries = args.queries or list(REGISTRY)
+    return args
 
 
 def main() -> None:
-    args = sys.argv[1:]
-    runs = 2
-    if "--runs" in args:
-        i = args.index("--runs")
-        runs = int(args[i + 1])
-        del args[i : i + 2]
-    out_path = args[0] if args else "/tmp/sweep_all.json"
-    names = args[1:] or list(REGISTRY)
+    args = parse_args()
+    names, runs = args.queries, args.runs
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     spark = get_spark("sweep-all")
     times: dict[str, float] = {}
@@ -46,14 +47,14 @@ def main() -> None:
     for i, name in enumerate(names):
         spark.sparkContext.setJobDescription(f"sweep: {name}")
         try:
-            run_once(spark, name, sf_dir)  # untimed warmup
-            t = min(run_once(spark, name, sf_dir) for _ in range(runs))
+            run_query(spark, name, sf_dir)  # untimed warmup
+            t = min(run_query(spark, name, sf_dir).wall_s for _ in range(runs))
             times[name] = round(t, 3)
         except Exception as e:  # noqa: BLE001 — a sweep must finish
             errs[name] = f"{type(e).__name__}: {e}"[:300]
         print(f"[{i + 1}/{len(names)}] {name}: {times.get(name, 'ERR')}", flush=True)
     ranked = dict(sorted(times.items(), key=lambda kv: -kv[1]))
-    with open(out_path, "w") as f:
+    with open(args.out, "w") as f:
         json.dump(
             {
                 "sf_dir": sf_dir,
@@ -67,7 +68,7 @@ def main() -> None:
             indent=1,
         )
         f.write("\n")
-    print("wrote", out_path, "total", round(sum(times.values()), 1), "s")
+    print("wrote", args.out, "total", round(sum(times.values()), 1), "s")
     spark.stop()
 
 
